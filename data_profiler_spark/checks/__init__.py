@@ -1,12 +1,10 @@
 from data_profiler_spark.checks.constraints import (  # noqa: F401
-    check_decodable,
     check_not_null,
-    check_dur_consistency,
     check_pk_not_null,
     check_referential,
     check_schema,
     check_unique,
-    check_value_range,
+    clip_row_specs,
     verdicts,
     with_partition_id,
 )

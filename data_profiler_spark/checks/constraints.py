@@ -24,7 +24,7 @@ a resumed run reproduces identical bucket assignment (SURVEY.md §7).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_PARTITIONS = 32
@@ -87,9 +87,46 @@ def row_level_violations(
     )
 
 
+def _null_or_empty(column: str) -> Column:
+    """Null or whitespace-only value (functions.py:57-64 semantics)."""
+    c = F.col(column)
+    return c.isNull() | (F.trim(c.cast("string")) == "")
+
+
+def clip_row_specs(dur_tol_ms: float) -> list[tuple]:
+    """The clip table's row-level checks as :func:`row_level_violations`
+    specs — the one definition ValidationRun runs:
+
+    - pk_not_null: null or empty primary key;
+    - audio_decodable: the payload failed to decode (decode_stats columns);
+    - dur_ms_consistent: |dur_ms − decoded_ms| > ``dur_tol_ms`` for a
+      decodable clip;
+    - transcript_not_null: null or empty transcript.
+    """
+    return [
+        ("pk_not_null", _null_or_empty("clip_id"), F.lit("null or empty primary key")),
+        (
+            "audio_decodable",
+            ~F.col("decode_ok"),
+            F.coalesce(F.col("decode_err"), F.lit("decode failed")),
+        ),
+        (
+            "dur_ms_consistent",
+            F.col("decode_ok") & (F.abs(F.col("dur_ms") - F.col("decoded_ms")) > dur_tol_ms),
+            F.concat(
+                F.lit("declared dur_ms="),
+                F.col("dur_ms").cast("string"),
+                F.lit(" decoded_ms="),
+                F.round("decoded_ms", 1).cast("string"),
+            ),
+        ),
+        ("transcript_not_null", _null_or_empty("transcript"), F.lit("null or empty transcript")),
+    ]
+
+
 def check_pk_not_null(df: DataFrame, key: str = "clip_id", name: str = "pk_not_null") -> DataFrame:
     """Null or empty primary key (functions.py:57-64 semantics)."""
-    bad = df.filter(F.col(key).isNull() | (F.trim(F.col(key)) == ""))
+    bad = df.filter(_null_or_empty(key))
     return _violations(bad, name, key, F.lit("null or empty primary key"))
 
 
@@ -98,7 +135,7 @@ def check_not_null(
 ) -> DataFrame:
     """Null or empty value in a required (non-PK) column."""
     name = name or f"{column}_not_null"
-    bad = df.filter(F.col(column).isNull() | (F.trim(F.col(column).cast("string")) == ""))
+    bad = df.filter(_null_or_empty(column))
     return _violations(bad, name, key, F.lit(f"null or empty {column}"))
 
 
@@ -142,54 +179,6 @@ def check_referential(
     )
     orphans = with_partition_id(orphans, n_partitions, key=key)
     return _violations(orphans, name, key, F.lit(detail))
-
-
-def check_value_range(
-    df: DataFrame,
-    column: str,
-    lo: float | None = None,
-    hi: float | None = None,
-    key: str = "clip_id",
-    name: str | None = None,
-) -> DataFrame:
-    """Numeric bound check (Describer's negative/outlier counting made a
-    constraint — data_profiler.py:541-562)."""
-    name = name or f"range_{column}"
-    cond = F.lit(False)
-    if lo is not None:
-        cond = cond | (F.col(column) < lo)
-    if hi is not None:
-        cond = cond | (F.col(column) > hi)
-    bad = df.filter(F.col(column).isNotNull() & cond)
-    detail = F.concat(F.lit(f"{column} out of range: "), F.col(column).cast("string"))
-    return _violations(bad, name, key, detail)
-
-
-def check_decodable(clip_stats: DataFrame, name: str = "audio_decodable") -> DataFrame:
-    """Clips whose payload failed to decode (stats from audio.decode_stats)."""
-    bad = clip_stats.filter(~F.col("decode_ok"))
-    return _violations(bad, name, "clip_id", F.coalesce(F.col("decode_err"), F.lit("decode failed")))
-
-
-def check_dur_consistency(
-    clip_stats: DataFrame,
-    tol_ms: float = 5.0,
-    name: str = "dur_ms_consistent",
-) -> DataFrame:
-    """|dur_ms − decoded_ms| ≤ tol for decodable clips.
-
-    Input: clip_stats joined with dur_ms (runner provides both columns).
-    """
-    bad = clip_stats.filter(
-        F.col("decode_ok") & (F.abs(F.col("dur_ms") - F.col("decoded_ms")) > tol_ms)
-    )
-    detail = F.concat(
-        F.lit("declared dur_ms="),
-        F.col("dur_ms").cast("string"),
-        F.lit(" decoded_ms="),
-        F.round("decoded_ms", 1).cast("string"),
-    )
-    return _violations(bad, name, "clip_id", detail)
 
 
 def check_schema(df: DataFrame, expected, name: str = "schema_conformance") -> tuple[bool, list[str]]:

@@ -1,8 +1,6 @@
 from data_profiler_spark.drift.drift import (  # noqa: F401
     drift_from_hist_rows,
-    ks_binned,
-    ks_binned_paired,
     ks_exact_by_group,
-    psi,
-    psi_paired,
+    passed,
+    psi_ks,
 )

@@ -15,7 +15,7 @@ still 90/10 skewed to exercise skew handling.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd

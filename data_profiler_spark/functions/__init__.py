@@ -5,12 +5,7 @@ whole-stage-codegen eligible). Python never touches row data.
 """
 
 from data_profiler_spark.functions.hashing import portable_hash64, portable_min_shingle_hash
-from data_profiler_spark.functions.text import (
-    char_shingles,
-    normalize_text,
-    tokens,
-    word_shingles,
-)
+from data_profiler_spark.functions.text import normalize_text, tokens
 from data_profiler_spark.functions.vectors import cosine_similarity, dot, l2_norm
 
 __all__ = [
@@ -18,8 +13,6 @@ __all__ = [
     "portable_min_shingle_hash",
     "normalize_text",
     "tokens",
-    "char_shingles",
-    "word_shingles",
     "cosine_similarity",
     "dot",
     "l2_norm",

@@ -47,21 +47,3 @@ def word_shingles_of(tok_col: Column, k: int = 3) -> Column:
         idx,
         lambda i: F.concat_ws(" ", F.slice(tok_col, i, k)),
     )
-
-
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Array of k-word shingles (space-joined). Docs shorter than k words
-    yield a single shingle of the whole doc so no row vanishes.
-
-    Convenience form — inlines the tokenizer into the shingle loop, so for
-    hot paths prefer materializing ``tokens()`` in a prior select and
-    calling :func:`word_shingles_of` (see its docstring)."""
-    return word_shingles_of(tokens(col), k)
-
-
-def char_shingles(col: Column | str, n: int = 5) -> Column:
-    """Array of character n-grams of the normalized text."""
-    s = normalize_text(col)
-    ln = F.length(s)
-    idx = F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.substring(s, i, n))

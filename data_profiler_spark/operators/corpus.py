@@ -12,17 +12,16 @@ entries, ordered new/changed-first, with the single rows-only entry
 test_audio.py's SNR ≥ 30 dB fidelity check) as the one tail slot outside
 the window. Slots were reclaimed by merging, not dropping, coverage:
 
-- text_features = lang_id + text_quality + token_counts + doc_fingerprint
-  (one projection, one scan — also the better 100 TB shape)
+- text_features = language id + text quality + token counts + doc
+  fingerprint (one projection, one scan — also the better 100 TB shape)
 - check_violations = check_unique_violations + check_referential_violations
   (the engine's single violations-table contract)
 - quantile_sketch and hll_distinct graduated from rows-only to oracled
   (exact counterpart values hash-checked + sketch error bound pinned true)
 - drift_scores = psi_drift + ks_exact_drift (both computations unchanged,
-  union'd into the production drift table's long format); r5 folds in the
-  grouped per-day PSI core (psi_paired(group_cols=...), the windowed-drift
-  shape) and global + per-day binned KS (ks_binned_paired) from the same
-  single pinned events scan as the global row
+  union'd into the production drift table's long format), plus per-day PSI
+  and global + per-day binned KS: the drift kernel (drift.psi_ks) scores
+  each grain once from the same single pinned events scan
 - hll_distinct absorbed distinct_counts_exact (one fused agg emits the
   A7/A8 exact universes plus the A9 sketch bounds)
 

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from data_profiler_spark.audio.decode import decode_stats
 from data_profiler_spark.checks import constraints
-from data_profiler_spark.drift.drift import ks_binned_paired, ks_exact_by_group, psi_paired
+from data_profiler_spark.drift.drift import ks_exact_by_group, psi_ks
 from data_profiler_spark.fixtures import generate_clips
 from data_profiler_spark.operators.corpus_relational import T
 from data_profiler_spark.profiling.profile import column_profile, outlier_counts
@@ -280,14 +280,11 @@ def _psi_bucket() -> F.Column:
 
 def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI of purchase-event values vs the view/click baseline, through the
-    engine's psi_paired() pipeline: both populations live in the SAME events
-    table, so ONE conditional aggregation over ONE scan produces both
-    histograms — the two-scan shape (separate _event_hist per population +
-    full-outer join, what psi() is for when the baseline is a persisted
-    snapshot) reads the table twice for no extra information. Identical
-    output (same bucketing, same ε-smoothing; the single-scan == two-scan
-    equivalence is pinned by tests/test_drift.py); events appears exactly
-    once in this entry's plan (tests/test_plan_audit.py)."""
+    engine's drift kernel (drift.psi_ks): both populations live in the SAME
+    events table, so ONE conditional aggregation over ONE scan produces the
+    paired counts — building two histograms would read the table twice for
+    no extra information. events appears exactly once in this entry's plan
+    (tests/test_plan_audit.py)."""
     ev = T(spark, sf_dir, "events")
     v = F.col("value")
     is_cur = F.col("event_type") == "purchase"
@@ -302,7 +299,7 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("column", F.lit("value"))
     )
-    return psi_paired(counts).select("column", F.round("psi", 6).alias("psi"))
+    return psi_ks(counts).select("column", F.round("psi", 6).alias("psi"))
 
 
 # The PSI bucket rule as SQL, interpolated into every oracle that bins
@@ -325,11 +322,12 @@ WITH cur AS (
   SELECT COALESCE(cur.bucket, base.bucket) AS bucket,
          COALESCE(c_cnt, 0) AS c_cnt, COALESCE(b_cnt, 0) AS b_cnt
   FROM cur FULL OUTER JOIN base ON cur.bucket = base.bucket
-), t AS (SELECT SUM(c_cnt) AS c_tot, SUM(b_cnt) AS b_tot FROM j)
+), t AS (SELECT NULLIF(SUM(c_cnt), 0) AS c_tot, NULLIF(SUM(b_cnt), 0) AS b_tot FROM j)
 SELECT 'value' AS "column",
        ROUND(SUM((c_cnt / CAST(c_tot AS DOUBLE) + 1e-6 - (b_cnt / CAST(b_tot AS DOUBLE) + 1e-6))
              * ln((c_cnt / CAST(c_tot AS DOUBLE) + 1e-6) / (b_cnt / CAST(b_tot AS DOUBLE) + 1e-6))), 6) AS psi
 FROM j, t
+GROUP BY 1
 """
 
 
@@ -351,14 +349,17 @@ _DAY_COUNTS_CTE = f"""
 """
 
 
-# Grouped PSI (r5 slot-reclaim extension of drift_scores): the same
-# purchase-vs-view/click comparison scored independently PER EVENT DAY —
-# the psi_paired(group_cols=...) core that streaming windowed drift
-# replicates per event-time window, previously pinned only by the numpy
-# property test. Same bucketing, same ε, same single-scan counts.
+# Grouped PSI: the same purchase-vs-view/click comparison scored
+# independently PER EVENT DAY — the psi_ks(group_cols=...) shape streaming
+# windowed drift uses per event-time window. Same bucketing, same ε, same
+# single-scan counts. Every drift oracle guards its totals with NULLIF, so
+# a day with no purchase (or no view/click) scores NULL, as the engine does.
 GROUPED_PSI_SQL = f"""
 WITH j AS ({_DAY_COUNTS_CTE}
-), t AS (SELECT day, SUM(c_cnt) AS c_tot, SUM(b_cnt) AS b_tot FROM j GROUP BY 1)
+), t AS (
+  SELECT day, NULLIF(SUM(c_cnt), 0) AS c_tot, NULLIF(SUM(b_cnt), 0) AS b_tot
+  FROM j GROUP BY 1
+)
 SELECT 'value' AS "column", j.day AS day,
        ROUND(SUM(((c_cnt / CAST(c_tot AS DOUBLE) + 1e-6) - (b_cnt / CAST(b_tot AS DOUBLE) + 1e-6))
              * ln((c_cnt / CAST(c_tot AS DOUBLE) + 1e-6) / (b_cnt / CAST(b_tot AS DOUBLE) + 1e-6))), 6) AS psi
@@ -368,11 +369,10 @@ GROUP BY 1, 2
 """
 
 
-# Binned KS (r5, same slot-reclaim): drift.ks_binned — the histogram-CDF
-# KS approximation the production drift job scores baselines with — was
-# only approximation-tested (test_drift.py vs exact KS); these rows put it
-# through the value-hash oracle, global AND per-day, from the same pinned
-# counts frame. D = max_b |CDF_cur(b) − CDF_base(b)| over bucket order.
+# Binned KS: the histogram-CDF KS approximation of drift.psi_ks — the one
+# the production drift job scores baselines with — through the value-hash
+# oracle, global AND per-day, from the same pinned counts frame.
+# D = max_b |CDF_cur(b) − CDF_base(b)| over bucket order.
 BINNED_KS_SQL = f"""
 WITH j AS ({_DAY_COUNTS_CTE}
 ), g AS (
@@ -380,20 +380,21 @@ WITH j AS ({_DAY_COUNTS_CTE}
 ), gc AS (
   SELECT SUM(c_cnt) OVER (ORDER BY bucket) AS cum_c,
          SUM(b_cnt) OVER (ORDER BY bucket) AS cum_b,
-         SUM(c_cnt) OVER () AS ct, SUM(b_cnt) OVER () AS bt
+         NULLIF(SUM(c_cnt) OVER (), 0) AS ct, NULLIF(SUM(b_cnt) OVER (), 0) AS bt
   FROM g
 ), dc AS (
   SELECT day,
          SUM(c_cnt) OVER (PARTITION BY day ORDER BY bucket) AS cum_c,
          SUM(b_cnt) OVER (PARTITION BY day ORDER BY bucket) AS cum_b,
-         SUM(c_cnt) OVER (PARTITION BY day) AS ct,
-         SUM(b_cnt) OVER (PARTITION BY day) AS bt
+         NULLIF(SUM(c_cnt) OVER (PARTITION BY day), 0) AS ct,
+         NULLIF(SUM(b_cnt) OVER (PARTITION BY day), 0) AS bt
   FROM j WHERE day IS NOT NULL
 )
 SELECT 'ksb:value' AS metric,
        ROUND(MAX(ABS(cum_c / CAST(ct AS DOUBLE) - cum_b / CAST(bt AS DOUBLE))), 6) AS value,
        CAST(NULL AS BIGINT) AS n
 FROM gc
+HAVING COUNT(*) > 0
 UNION ALL
 SELECT 'ksb:value:' || day AS metric,
        ROUND(MAX(ABS(cum_c / CAST(ct AS DOUBLE) - cum_b / CAST(bt AS DOUBLE))), 6) AS value,
@@ -621,23 +622,20 @@ FROM c GROUP BY event_type
 
 
 def drift_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's drift report in one frame (r3 slot reclaim: psi_drift +
-    ks_exact_drift merged; r5 extends it with GROUPED per-day PSI — the
-    psi_paired(group_cols=...) core streaming windowed drift replicates per
-    event-time window, previously pinned only by the numpy property test —
-    and with global + per-day binned KS via ks_binned_paired, all without
-    spending a corpus slot): one row per drift metric, (metric, value, n).
-    PSI and binned KS ride the histogram pipeline, exact KS the
-    applyInPandas path vs the md5-sampled baseline — every engine drift
-    path stays fully exercised and fully oracled.
+    """The engine's drift report in one frame: one row per drift metric,
+    (metric, value, n). Global and per-day PSI ('psi:…') and binned KS
+    ('ksb:…') come from the drift kernel (drift.psi_ks), one call per grain
+    with both scores melted into metric rows; exact KS ('ks:…') comes from
+    the applyInPandas path vs the md5-sampled baseline — every engine drift
+    path stays fully exercised and fully oracled. A day with no purchase
+    (or no view/click) event scores NULL.
 
     Scan shape: ONE events pass builds the (day, bucket)-grain conditional
-    counts, pinned; the global PSI/KS re-aggregate those integer counts
+    counts, pinned; the global scores re-aggregate those integer counts
     across days (exactly psi_drift's bucket-grain counts, so the
-    'psi:value' row is unchanged) and the grouped metrics score each day
-    from the same pinned frame — the old two-branch shape would have paid
-    a second full events scan for the day grain. Exact KS keeps its own
-    raw-value scan (not derivable from any histogram)."""
+    'psi:value' row is unchanged) and the per-day scores read the same
+    pinned frame. Exact KS keeps its own raw-value scan (not derivable from
+    any histogram)."""
     from data_profiler_spark.functions.windows import pin_cache
 
     ev = T(spark, sf_dir, "events")
@@ -660,45 +658,30 @@ def drift_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     global_counts = day_counts.groupBy("column", "bucket").agg(
         F.sum("c_cnt").alias("c_cnt"), F.sum("b_cnt").alias("b_cnt")
     )
-    p = psi_paired(global_counts).select(
-        F.concat(F.lit("psi:"), F.col("column")).alias("metric"),
-        F.round("psi", 6).alias("value"),
-        F.lit(None).cast("long").alias("n"),
-    )
-    gp = psi_paired(
-        day_counts.filter(F.col("day").isNotNull()), group_cols=["day"]
-    ).select(
-        F.concat(F.lit("psi:"), F.col("column"), F.lit(":"), F.col("day")).alias(
-            "metric"
-        ),
-        F.round("psi", 6).alias("value"),
-        F.lit(None).cast("long").alias("n"),
-    )
-    # binned KS (drift.ks_binned_paired — the histogram-CDF approximation
-    # the production drift job scores with, in the paired single-scan shape;
-    # identical to ks_binned, pinned by test_drift.py) through the
-    # value-hash oracle, global and per-day, from the SAME pinned counts —
-    # no extra events pass, no self-join of the counts frame.
-    kb = ks_binned_paired(global_counts).select(
-        F.concat(F.lit("ksb:"), F.col("column")).alias("metric"),
-        F.round("ks_d", 6).alias("value"),
-        F.lit(None).cast("long").alias("n"),
-    )
-    kbd = ks_binned_paired(
-        day_counts.filter(F.col("day").isNotNull()), group_cols=["day"]
-    ).select(
-        F.concat(F.lit("ksb:"), F.col("column"), F.lit(":"), F.col("day")).alias(
-            "metric"
-        ),
-        F.round("ks_d", 6).alias("value"),
-        F.lit(None).cast("long").alias("n"),
-    )
+
+    def melted(counts: DataFrame, group_cols: list[str], suffix: list) -> DataFrame:
+        def metric(kind: str, score: str) -> F.Column:
+            return F.struct(
+                F.concat(F.lit(kind), F.col("column"), *suffix).alias("metric"),
+                F.round(score, 6).alias("value"),
+            )
+
+        return psi_ks(counts, group_cols).select(
+            F.inline(F.array(metric("psi:", "psi"), metric("ksb:", "ks_d"))),
+            F.lit(None).cast("long").alias("n"),
+        )
+
+    by_day = day_counts.filter(F.col("day").isNotNull())
     k = ks_exact_drift(spark, sf_dir).select(
         F.concat(F.lit("ks:"), F.col("event_type")).alias("metric"),
         F.col("ks_d").alias("value"),
         F.col("n"),
     )
-    return p.unionByName(gp).unionByName(kb).unionByName(kbd).unionByName(k)
+    return (
+        melted(global_counts, [], [])
+        .unionByName(melted(by_day, ["day"], [F.lit(":"), F.col("day")]))
+        .unionByName(k)
+    )
 
 
 DRIFT_SCORES_SQL = f"""

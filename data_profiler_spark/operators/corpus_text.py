@@ -7,10 +7,9 @@ results match bit-for-bit after fixed rounding.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_profiler_spark.functions.vectors import cosine_similarity
 from data_profiler_spark.operators import cluster, dedup, sampling, similarity, textops
 from data_profiler_spark.operators.corpus_relational import T
 from data_profiler_spark.operators.textops import (
@@ -25,7 +24,7 @@ _TOKS = f"list_filter(string_split({_NORM}, ' '), t -> t != '')"
 
 
 def _shingles_sql(k: int) -> str:
-    """Word-k-shingles list, mirroring functions/text.py::word_shingles."""
+    """Word-k-shingles list, mirroring functions/text.py::word_shingles_of."""
     return (
         f"list_transform(range(1, greatest(len(tk) - {k - 1}, 1) + 1), "
         f"i -> array_to_string(list_slice(tk, i, i + {k - 1}), ' '))"
@@ -307,116 +306,10 @@ WHERE ROUND(shared / (sa.n + sb.n - shared), 6) >= {JACCARD_THRESHOLD}
 """
 
 
-# --- text quality -------------------------------------------------------------
-
-def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textops.quality_scores(T(spark, sf_dir, "documents"), "doc_id", "text")
-
-
+# Stopword list and fingerprint windowing shared with the text_features oracle.
 _SW_LIST = "[" + ", ".join(f"'{s}'" for s in EN_STOPWORDS) + "]"
 
-TEXT_QUALITY_SQL = f"""
-WITH base AS (
-  SELECT doc_id AS id, {_NORM} AS norm, {_TOKS} AS tk FROM documents
-), feat AS (
-  SELECT id,
-    len(tk) AS n_tok,
-    length(norm) AS n_chars,
-    len(list_filter(tk, t -> list_contains({_SW_LIST}, t))) AS n_stop,
-    length(norm) - length(regexp_replace(norm, '[^\\w\\s]', '', 'g')) AS n_punct,
-    length(norm) - length(regexp_replace(norm, '[a-z]', '', 'g')) AS n_alpha
-  FROM base
-), ratio AS (
-  SELECT id, n_tok, n_chars,
-    (n_chars - (n_tok - 1)) / NULLIF(CAST(n_tok AS DOUBLE), 0.0) AS mean_token_len,
-    n_stop / NULLIF(CAST(n_tok AS DOUBLE), 0.0) AS stop_ratio,
-    n_punct / NULLIF(CAST(n_chars AS DOUBLE), 0.0) AS punct_ratio,
-    n_alpha / NULLIF(CAST(n_chars AS DOUBLE), 0.0) AS alpha_ratio
-  FROM feat
-)
-SELECT id,
-  CAST(n_tok AS INT) AS n_tokens,
-  CAST(n_chars AS INT) AS n_chars_norm,
-  ROUND(mean_token_len, 6) AS mean_token_len,
-  ROUND(stop_ratio, 6) AS stopword_ratio,
-  ROUND(punct_ratio, 6) AS punct_ratio,
-  ROUND(alpha_ratio, 6) AS alpha_ratio,
-  ROUND(
-    least(n_tok / 20.0, 1.0) * 0.25
-    + COALESCE(alpha_ratio, 0.0) * 0.35
-    + least(COALESCE(stop_ratio, 0.0) * 4.0, 1.0) * 0.25
-    + (1.0 - least(COALESCE(punct_ratio, 0.0) * 5.0, 1.0)) * 0.15, 6) AS quality_score
-FROM ratio
-"""
-
-
-# --- language ID ---------------------------------------------------------------
-
-def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textops.language_id(T(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-def _lang_id_sql() -> str:
-    langs = list(LANG_MARKERS)
-    score_cols = ", ".join(
-        "len(list_filter(tk, t -> list_contains(["
-        + ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
-        + f"], t))) AS s_{lang}"
-        for lang in langs
-    )
-    # First language in declaration order reaching the (positive) max wins —
-    # identical to the strict-> fold in textops.language_id.
-    pred_branches, score_branches = [], []
-    for i, lang in enumerate(langs):
-        rest = [f"s_{other}" for other in langs[i + 1 :]]
-        cond = f"s_{lang} > 0"
-        if rest:
-            cond += f" AND s_{lang} >= greatest({', '.join(rest)})" if len(rest) > 1 else f" AND s_{lang} >= {rest[0]}"
-        pred_branches.append(f"WHEN {cond} THEN '{lang}'")
-        score_branches.append(f"WHEN {cond} THEN s_{lang}")
-    return f"""
-WITH tk_t AS (SELECT doc_id AS id, {_TOKS} AS tk FROM documents),
-sc AS (SELECT id, {score_cols} FROM tk_t)
-SELECT id,
-  CASE {' '.join(pred_branches)} ELSE 'und' END AS lang_pred,
-  CAST(CASE {' '.join(score_branches)} ELSE 0 END AS INT) AS score
-FROM sc
-"""
-
-
-# --- token counting -------------------------------------------------------------
-
-def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textops.token_counts(T(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-TOKEN_COUNTS_SQL = f"""
-SELECT doc_id AS id,
-  CAST(len({_TOKS}) AS INT) AS ws_tokens,
-  CAST(len(regexp_extract_all({_NORM}, '{TOKEN_PATTERN}')) AS INT) AS bpe_tokens
-FROM documents
-"""
-
-
-# --- winnowing fingerprint -------------------------------------------------------
-
 FP_WINDOW, FP_STRIDE = 16, 8
-
-
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textops.fingerprint(
-        T(spark, sf_dir, "documents"), "doc_id", "text", window=FP_WINDOW, stride=FP_STRIDE
-    )
-
-
-DOC_FINGERPRINT_SQL = f"""
-WITH n_t AS (SELECT doc_id AS id, {_NORM} AS norm FROM documents)
-SELECT id,
-  list_min(list_transform(
-    range(1, greatest(length(norm) - {FP_WINDOW - 1}, 1) + 1, {FP_STRIDE}),
-    i -> md5(substr(norm, CAST(i AS INT), {FP_WINDOW})))) AS fingerprint
-FROM n_t
-"""
 
 
 # --- merged per-doc feature sweep ------------------------------------------------

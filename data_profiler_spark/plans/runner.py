@@ -15,7 +15,7 @@ Dataflow (all checks share ONE decode pass and ONE persisted stats frame):
           map-side: bytes never shuffled) ──► salt_repartition(stats) [persist]
           ├─► constraint violations (union of anti-joins/filters)
           ├─► per-partition column profile (single fused agg)
-          ├─► dur_ms histogram → PSI/KS vs baseline snapshot
+          ├─► per-column histograms (baseline edges) → PSI/KS vs baseline
           └─► verdicts (checks × partitions grid vs violation counts)
 
 Key scale property: duplicate keys hash to the same partition_id
@@ -23,12 +23,17 @@ Key scale property: duplicate keys hash to the same partition_id
 even under resume — a duplicate can never straddle a completed and a
 pending partition undetected unless it was already detected when the first
 partition completed.
+
+Drift: the histograms are aggregated distributed, then scored driver-side by
+drift_from_hist_rows, the twin of the one Spark drift kernel (drift.psi_ks)
+with the same rules — an empty side scores NULL, and a score passes iff it
+is <= its threshold (NULL fails). Drift needs both baseline tables
+(baseline_hist + baseline_meta, stamped with one baseline_id); without them
+it is skipped, and a mismatched pair raises.
 """
 
 from __future__ import annotations
 
-import os
-import sys
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -42,16 +47,16 @@ from data_profiler_spark.audio import decode_stats, salt_repartition
 from data_profiler_spark.checks import (
     check_referential,
     check_unique,
+    clip_row_specs,
     with_partition_id,
 )
 from data_profiler_spark.checks.constraints import row_level_violations
-from data_profiler_spark.drift import drift_from_hist_rows
+from data_profiler_spark.drift import drift_from_hist_rows, passed
 from data_profiler_spark.functions.frames import local_frame
 from data_profiler_spark.plans.manifest import Manifest
 from data_profiler_spark.profiling import (
     categorical_histogram,
     column_profile_collected,
-    histogram,
     histograms_multi,
 )
 from data_profiler_spark.profiling.tdigest import merge_sketch_rows, sketch_by_group
@@ -100,33 +105,16 @@ class ValidationRun:
         dur_tol_ms: float = 5.0,
         psi_threshold: float = 0.25,
         ks_threshold: float = 0.2,
-        salt_mode: str = "stats",
         manifest_table: str = "manifest",
     ):
-        """``salt_mode`` picks WHERE the anti-skew salt shuffle happens:
-
-        - ``"stats"`` (default): decode map-side straight off the scan —
-          the `bytes` column NEVER crosses a shuffle — then salt-repartition
-          the decoded stats frame (≈30 bytes/row, ~0.03% of the input) so
-          every downstream pass sees balanced row counts. At 10^12 clips a
-          payload shuffle is ~the full 100TB through shuffle disks; scan
-          splits are already byte-proportional (`maxPartitionBytes`), and for
-          PCM decode cost ∝ bytes, so map-side decode is inherently balanced.
-        - ``"bytes"``: salt the raw payload BEFORE decode. Only worth it for
-          adversarially ordered inputs where decode cost per byte varies
-          wildly (e.g. file groups clustered by a high-compression codec so
-          equal-byte splits hide 10× decoded-duration differences).
-        - ``"none"``: no explicit salt (tests / pre-balanced input).
-        """
+        """A drift score passes iff it is ``<= psi_threshold`` /
+        ``<= ks_threshold``; a NULL score (an empty side) fails."""
         self.spark = spark
         self.io = io
         self.n_partitions = n_partitions
         self.dur_tol_ms = dur_tol_ms
         self.psi_threshold = psi_threshold
         self.ks_threshold = ks_threshold
-        if salt_mode not in ("stats", "bytes", "none"):
-            raise ValueError(f"salt_mode must be stats|bytes|none, got {salt_mode!r}")
-        self.salt_mode = salt_mode
         self.manifest = Manifest(io, spark, table=manifest_table)
 
     # -- committed reads -----------------------------------------------------
@@ -275,22 +263,12 @@ class ValidationRun:
         — the bootstrap shape for a first run on clean data.
         """
         t0 = time.monotonic()
-        verbose = os.environ.get("DPS_VERBOSE_TIMING") == "1"
-        last = [t0]
-
-        def mark(label: str) -> None:
-            if verbose:
-                now = time.monotonic()
-                print(f"  [timing] {label}: {now - last[0]:.1f}s", file=sys.stderr)
-                last[0] = now
-
         clips = with_partition_id(clips, self.n_partitions)
 
         done = self.manifest.completed_partitions() if filter_pending else set()
         pending = sorted(set(range(self.n_partitions)) - done)
         if limit_partitions is not None:
             pending = pending[:limit_partitions]
-        mark("manifest read")
         if not pending:
             empty_v = self.spark.createDataFrame([], VIOLATION_SCHEMA)
             empty_verd = self.spark.createDataFrame([], VERDICT_SCHEMA)
@@ -305,20 +283,21 @@ class ValidationRun:
         # One decode pass; every scalar column rides through the UDF so
         # NOTHING downstream ever rescans clips — after this point the wide
         # `bytes` column is gone and the whole suite (checks, profile, drift)
-        # runs off one persisted stats frame. Salt placement per salt_mode
-        # (see __init__): default decodes map-side and salts only the tiny
-        # stats frame, so the payload never crosses a shuffle.
+        # runs off one persisted stats frame. Decode runs map-side straight
+        # off the scan, so the `bytes` column never crosses a shuffle (at
+        # 10^12 clips a payload shuffle is ~the full 100TB through shuffle
+        # disks; scan splits are byte-proportional and PCM decode cost ∝
+        # bytes, so map-side decode is already balanced). Only the decoded
+        # stats frame (≈30 bytes/row) is salt-repartitioned, so every
+        # downstream pass sees balanced row counts.
         width = self.spark.sparkContext.defaultParallelism * 2
         selected = clips.select(
             "clip_id", "bytes", "sr_hz", "codec", "dur_ms", "transcript", "partition_id"
         )
-        if self.salt_mode == "bytes":
-            selected = salt_repartition(selected, width)
         stats = decode_stats(
             selected, passthrough=["sr_hz", "dur_ms", "codec", "transcript", "partition_id"]
         )
-        if self.salt_mode == "stats":
-            stats = salt_repartition(stats, width)
+        stats = salt_repartition(stats, width)
         # Materialize the cache BEFORE fanning out: the violation union scans
         # stats from several branches of ONE job, and branches racing an
         # unpopulated cache each re-run the decode (4× the dominant cost).
@@ -327,7 +306,6 @@ class ValidationRun:
             transcripts = transcripts.persist(StorageLevel.MEMORY_AND_DISK)
             transcripts.count()
 
-        mark("decode+persist")
         # The whole post-persist tail runs under try/finally: any
         # raising path (a failed tail job, the baseline_id mismatch
         # guard, a sink write) must not leak the MEMORY_AND_DISK
@@ -342,7 +320,6 @@ class ValidationRun:
                 # baseline_meta, and overwriting them concurrently from this
                 # thread would race the read (FILE_NOT_EXIST mid-scan).
                 self.write_baseline(None, stats=stats)
-                mark("baseline snapshot (shared decode)")
             # -- constraint checks (names drive the verdict grid) ----------------
             # Row-level checks fuse into ONE scan of stats (no joins); only
             # uniqueness (groupBy) and the two referential directions (anti-joins)
@@ -350,35 +327,7 @@ class ValidationRun:
             # the scale: locally each job has fixed overhead, on a cluster each
             # pass over 10^12 rows is the cost unit.
             n = self.n_partitions
-            key = F.col("clip_id")
-            row_specs = [
-                (
-                    "pk_not_null",
-                    key.isNull() | (F.trim(key) == ""),
-                    F.lit("null or empty primary key"),
-                ),
-                (
-                    "audio_decodable",
-                    ~F.col("decode_ok"),
-                    F.coalesce(F.col("decode_err"), F.lit("decode failed")),
-                ),
-                (
-                    "dur_ms_consistent",
-                    F.col("decode_ok")
-                    & (F.abs(F.col("dur_ms") - F.col("decoded_ms")) > self.dur_tol_ms),
-                    F.concat(
-                        F.lit("declared dur_ms="),
-                        F.col("dur_ms").cast("string"),
-                        F.lit(" decoded_ms="),
-                        F.round("decoded_ms", 1).cast("string"),
-                    ),
-                ),
-                (
-                    "transcript_not_null",
-                    F.col("transcript").isNull() | (F.trim(F.col("transcript")) == ""),
-                    F.lit("null or empty transcript"),
-                ),
-            ]
+            row_specs = clip_row_specs(self.dur_tol_ms)
             check_names = [s[0] for s in row_specs] + ["pk_unique"]
             branches = [
                 row_level_violations(stats, row_specs),
@@ -448,59 +397,48 @@ class ValidationRun:
 
             def job_drift():
                 # Per-column histograms vs baseline → PSI + binned-KS per
-                # DRIFT_COLUMNS column. Current histograms are binned with the
-                # BASELINE's persisted edges (baseline_meta) — all columns in one
-                # scan of the stats cache. The histogram aggregations run
-                # distributed; the comparison is ≤ nbins+2 rows per column, so it
-                # is computed driver-side (drift_from_hist_rows) instead of as
-                # two join DAGs. Pre-meta baselines (dur_ms only, fixed edges)
-                # keep working via the legacy fallback.
-                if not self.io.exists(self.spark, "baseline_hist"):
+                # baseline column. Current histograms are binned with the
+                # BASELINE's persisted edges (baseline_meta) — all columns in
+                # one scan of the stats cache. The histogram aggregation runs
+                # distributed; the comparison is ≤ nbins+2 rows per column,
+                # so drift_from_hist_rows (the driver twin of the drift.psi_ks
+                # kernel, same zero-total rule) scores it without another
+                # Spark job. Pass iff score <= threshold; NULL fails. Without
+                # both baseline tables there is nothing to score against.
+                if not (
+                    self.io.exists(self.spark, "baseline_hist")
+                    and self.io.exists(self.spark, "baseline_meta")
+                ):
                     return None
                 base_rows = self.io.read(self.spark, "baseline_hist").collect()
-                if self.io.exists(self.spark, "baseline_meta"):
-                    meta_rows = self.io.read(self.spark, "baseline_meta").collect()
-                    hist_ids = {
-                        r["baseline_id"]
-                        for r in base_rows
-                        if "baseline_id" in r.__fields__
-                    }
-                    meta_ids = {
-                        r["baseline_id"]
-                        for r in meta_rows
-                        if "baseline_id" in r.__fields__
-                    }
-                    # ANY asymmetry is a mismatch — including one table stamped
-                    # and the other pre-stamping-era (a new-code write_baseline
-                    # that crashed after meta left exactly that state).
-                    if (hist_ids or meta_ids) and hist_ids != meta_ids:
-                        raise RuntimeError(
-                            "baseline_hist/baseline_meta carry different baseline_ids "
-                            f"({hist_ids or '{legacy}'} vs {meta_ids or '{legacy}'}) — "
-                            "write_baseline crashed between its two table writes; "
-                            "re-run write_baseline"
-                        )
-                    specs = {
-                        r["column"]: (r["lo"], r["hi"], r["nbins"])
-                        for r in meta_rows
-                        if r["nbins"] > 0
-                    }
-                    cur = histograms_multi(stats, specs)
-                    for r in meta_rows:
-                        if r["nbins"] == 0:  # categorical (stable-hash buckets)
-                            cur = cur.unionByName(categorical_histogram(stats, r["column"]))
-                    cur_rows = cur.collect()
-                else:
-                    cur_rows = histogram(
-                        stats, "dur_ms", lo=0.0, hi=16000.0, nbins=DUR_HIST_BINS
-                    ).collect()
+                meta_rows = self.io.read(self.spark, "baseline_meta").collect()
+                # Both tables must carry one and the same baseline_id; a
+                # table without the column (or with a different id) is a
+                # crash between write_baseline's two overwrites.
+                hist_ids = {r.asDict().get("baseline_id") for r in base_rows}
+                meta_ids = {r.asDict().get("baseline_id") for r in meta_rows}
+                if hist_ids != meta_ids or len(hist_ids) != 1 or None in hist_ids:
+                    raise RuntimeError(
+                        "baseline_hist/baseline_meta do not share one baseline_id "
+                        f"({hist_ids} vs {meta_ids}) — write_baseline crashed "
+                        "between its two table writes; re-run write_baseline"
+                    )
+                specs = {
+                    r["column"]: (r["lo"], r["hi"], r["nbins"])
+                    for r in meta_rows
+                    if r["nbins"] > 0
+                }
+                cur = histograms_multi(stats, specs)
+                for r in meta_rows:
+                    if r["nbins"] == 0:  # categorical (stable-hash buckets)
+                        cur = cur.unionByName(categorical_histogram(stats, r["column"]))
                 return [
                     {
                         **d,
-                        "psi_passed": d["psi"] <= self.psi_threshold,
-                        "ks_passed": d["ks_d"] <= self.ks_threshold,
+                        "psi_passed": passed(d["psi"], self.psi_threshold),
+                        "ks_passed": passed(d["ks_d"], self.ks_threshold),
                     }
-                    for d in drift_from_hist_rows(cur_rows, base_rows)
+                    for d in drift_from_hist_rows(cur.collect(), base_rows)
                 ]
 
             def job_sketches():
@@ -520,7 +458,6 @@ class ValidationRun:
                 prof_rows = f_prof.result()
                 drift_rows = f_drift.result()
                 f_sketch.result()
-            mark("parallel tail (violations+totals+profile+drift+sketches)")
 
             verdict_rows = [
                 {
@@ -539,13 +476,11 @@ class ValidationRun:
             # tiny metadata write measured on this sandbox).
             verdict_df = local_frame(self.spark, verdict_rows, VERDICT_SCHEMA)
             self.io.append(verdict_df.coalesce(1).select(tag, "*"), "verdicts")
-            mark("verdict write")
 
             profile = local_frame(
                 self.spark, prof_rows, "partition_id int, column string, metric string, value double"
             )
             self.io.append(profile.coalesce(1).select(tag, "*"), "profile")
-            mark("profile write")
 
             drift = None
             if drift_rows is not None:
@@ -554,7 +489,6 @@ class ValidationRun:
                     "column string, psi double, ks_d double, psi_passed boolean, ks_passed boolean",
                 )
                 self.io.append(drift.coalesce(1).select(tag, "*"), "drift")
-            mark("drift")
             per_part: dict[int, int] = {}
             viol_per_part: dict[int, int] = {}
             all_passed = True
@@ -578,8 +512,6 @@ class ValidationRun:
                 for p in pending
             ]
             self.manifest.commit(part_stats, snap, wall_ms)
-
-            mark("manifest commit")
         except BaseException:
             if _viol_cache is not None:
                 _viol_cache.unpersist()

@@ -206,12 +206,3 @@ REF_FILE_DTYPES: dict[str, dict[str, str]] = {
         "Quantity": "float64",
     },
 }
-
-
-def ref_file_schema(file_type: str) -> T.StructType:
-    """StructType for a reference CSV file type (all nullable)."""
-    fields = [
-        T.StructField(col, REF_DTYPE_DEFAULTS[dt][0], True)
-        for col, dt in REF_FILE_DTYPES[file_type].items()
-    ]
-    return T.StructType(fields)

@@ -24,8 +24,3 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TPCH_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -28,19 +28,6 @@ from pyspark.sql import functions as F
 from data_profiler_spark.functions.text import normalize_text
 
 
-def dedup_stream(
-    stream: DataFrame,
-    key_cols: list[str],
-    event_time_col: str,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """First arrival per ``key_cols`` within the watermark wins; later
-    re-arrivals are dropped. Append-mode streaming DataFrame in, same out."""
-    return stream.withWatermark(event_time_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-
-
 def dedup_doc_stream(
     stream: DataFrame,
     text_col: str = "text",
@@ -48,7 +35,12 @@ def dedup_doc_stream(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Content-level streaming dedup: fingerprint = md5 of the normalized
-    text (identical to operators/dedup.exact_duplicates), dedup on it, and
-    keep the fingerprint column for downstream lineage/auditing."""
-    fp = stream.withColumn("fingerprint", F.md5(normalize_text(text_col)))
-    return dedup_stream(fp, ["fingerprint"], event_time_col, watermark)
+    text (identical to operators/dedup.exact_duplicates); the first arrival
+    per fingerprint within the watermark wins, later re-arrivals are
+    dropped. Append-mode streaming DataFrame in, same out, with the
+    fingerprint column kept for downstream lineage/auditing."""
+    return (
+        stream.withColumn("fingerprint", F.md5(normalize_text(text_col)))
+        .withWatermark(event_time_col, watermark)
+        .dropDuplicatesWithinWatermark(["fingerprint"])
+    )

@@ -76,7 +76,6 @@ def validate_stream(
     input_path: str,
     checkpoint_dir: str,
     n_partitions: int = 32,
-    salt_mode: str = "stats",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     timeout_sec: float | None = None,
@@ -97,8 +96,7 @@ def validate_stream(
         if batch_df.isEmpty():
             return
         run = ValidationRun(
-            spark, io, n_partitions=n_partitions, salt_mode=salt_mode,
-            manifest_table="manifest_stream",
+            spark, io, n_partitions=n_partitions, manifest_table="manifest_stream",
         )
         if batch_id in run.manifest.completed_batch_ids():
             return  # replayed batch already fully committed — idempotent skip

@@ -1,24 +1,26 @@
 """Per-window distribution drift over an event-time stream.
 
 Composes the two §2.9 building blocks the engine already has — the
-watermarked windowed aggregation (windowed_profile.py) and the
-histogram-based drift scores (drift/drift.py) — into the monitoring shape a
-continuously-landing clips table actually needs: every closed event-time
-window is scored (PSI + binned KS) against the persisted baseline
-histogram, and the per-window drift verdicts append to a TableIO table.
+watermarked windowed aggregation (windowed_profile.py) and the drift kernel
+(drift/drift.py) — into the monitoring shape a continuously-landing clips
+table actually needs: every closed event-time window is scored (PSI +
+binned KS) against the persisted baseline histogram, and the per-window
+drift verdicts append to a TableIO table.
 
 Dataflow per micro-batch (everything distributed; the only driver-side
 value is the stream lifecycle itself):
 
     readStream ──watermark──► groupBy(window(ts), width_bucket(value))
                ──append mode──► foreachBatch:
-                   closed-window bucket counts (HISTOGRAM rows + window)
-                   ⋈ baseline replicated per window   (≤ nbins × windows)
-                   → psi / ks_binned (group_cols=[window_start])
+                   closed-window bucket counts        (c_cnt side)
+                   ∪ baseline replicated per window   (b_cnt side)
+                   → sum(c_cnt), sum(b_cnt) per (window, bucket)
+                   → psi_ks(group_cols=[window])      (one kernel call)
+                   → pass iff score <= threshold (NULL fails)
                    → io.append(table)
 
 Scale notes: the stream state is O(open windows × buckets) thanks to the
-watermark; a batch's drift math joins two ≤(nbins+2)×windows-row frames —
+watermark; a batch's drift math runs over a ≤(nbins+2)×windows-row frame —
 metadata at any data scale. Append output mode means each window is scored
 exactly once, when it closes; a replayed batch re-appends the same rows
 keyed by the same window (dedupe on read via the window key if the sink
@@ -32,7 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_profiler_spark.drift.drift import ks_binned, psi
+from data_profiler_spark.drift.drift import passed, psi_ks
 from data_profiler_spark.sources.tableio import ParquetTableIO, TableIO
 
 
@@ -58,6 +60,10 @@ def windowed_drift_stream(
     """Drain pending files; score every newly closed window vs the baseline
     and append (window_start, window_end, column, psi, ks_d, psi_passed,
     ks_passed) rows to ``table``. Returns the table as a DataFrame.
+
+    The stored scores are the unrounded values the flags were computed
+    from, under the batch runner's rule: pass iff ``score <= threshold``;
+    an empty baseline scores NULL and fails.
 
     ``lo``/``hi``/``nbins`` MUST be the edges the baseline was built with
     (the engine persists them in the baseline snapshot) — PSI/KS compare
@@ -98,22 +104,26 @@ def windowed_drift_stream(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():  # no window closed this batch
             return
+        keys = ["column", "window_start", "window_end"]
         windows = batch_df.select("window_start", "window_end").distinct()
         base_w = base.crossJoin(F.broadcast(windows))
-        keys = ["column", "window_start", "window_end"]
-        p = psi(batch_df, base_w, group_cols=["window_start", "window_end"])
-        k = ks_binned(batch_df, base_w, group_cols=["window_start", "window_end"])
-        out = (
-            p.join(k, keys)
-            .select(
-                "window_start",
-                "window_end",
-                "column",
-                F.round("psi", 6).alias("psi"),
-                F.round("ks_d", 6).alias("ks_d"),
-                (F.col("psi") < psi_threshold).alias("psi_passed"),
-                (F.col("ks_d") < ks_threshold).alias("ks_passed"),
+        zero = F.lit(0).cast("long")
+        counts = (
+            batch_df.select(*keys, "bucket", F.col("count").alias("c_cnt"), zero.alias("b_cnt"))
+            .unionByName(
+                base_w.select(*keys, "bucket", zero.alias("c_cnt"), F.col("count").alias("b_cnt"))
             )
+            .groupBy(*keys, "bucket")
+            .agg(F.sum("c_cnt").alias("c_cnt"), F.sum("b_cnt").alias("b_cnt"))
+        )
+        out = psi_ks(counts, group_cols=["window_start", "window_end"]).select(
+            "window_start",
+            "window_end",
+            "column",
+            "psi",
+            "ks_d",
+            passed(F.col("psi"), psi_threshold).alias("psi_passed"),
+            passed(F.col("ks_d"), ks_threshold).alias("ks_passed"),
         )
         io.append(out, table)
 

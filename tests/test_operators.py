@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_profiler_spark.checks.constraints import row_level_violations
-from data_profiler_spark.drift.drift import drift_from_hist_rows, ks_binned, psi
+from data_profiler_spark.drift.drift import drift_from_hist_rows, psi_ks
 from data_profiler_spark.operators import dedup, multimodal, similarity, textops
 
 DOCS = [
@@ -206,15 +206,14 @@ def test_row_level_violations_fused(spark):
 def test_drift_from_hist_rows_matches_spark_ops(spark):
     cur = [{"column": "x", "bucket": b, "count": c} for b, c in [(1, 10), (2, 30), (3, 60)]]
     base = [{"column": "x", "bucket": b, "count": c} for b, c in [(1, 30), (2, 40), (3, 30)]]
-    cur_df = spark.createDataFrame([(r["column"], r["bucket"], r["count"]) for r in cur],
-                                   "column string, bucket int, count long")
-    base_df = spark.createDataFrame([(r["column"], r["bucket"], r["count"]) for r in base],
-                                    "column string, bucket int, count long")
-    spark_psi = psi(cur_df, base_df).collect()[0]["psi"]
-    spark_ks = ks_binned(cur_df, base_df).collect()[0]["ks_d"]
+    counts = spark.createDataFrame(
+        [("x", c["bucket"], c["count"], b["count"]) for c, b in zip(cur, base)],
+        "column string, bucket int, c_cnt long, b_cnt long",
+    )
+    got = psi_ks(counts).collect()[0]
     local = drift_from_hist_rows(cur, base)[0]
-    assert local["psi"] == pytest.approx(spark_psi, rel=1e-9)
-    assert local["ks_d"] == pytest.approx(spark_ks, rel=1e-9)
+    assert local["psi"] == pytest.approx(got["psi"], rel=1e-9)
+    assert local["ks_d"] == pytest.approx(got["ks_d"], rel=1e-9)
 
 
 def test_media_decode_stats_exact(spark):

@@ -103,6 +103,26 @@ def test_drift_trips_only_shifted_column(spark, tmp_io):
     assert rows["codec"]["psi_passed"]  # gain does not move the codec mix
 
 
+def test_drift_score_on_its_threshold_passes(spark, tmp_io):
+    """A column whose score equals psi_threshold / ks_threshold exactly
+    passes (the rule is score <= threshold, as in the windowed stream)."""
+    clean = fixtures.generate_clips(spark, N, seed=SEED)
+    louder = fixtures.generate_clips(
+        spark, N, seed=SEED, corruptions=fixtures.Corruptions(gain_all=1.6)
+    )
+    run = ValidationRun(spark, tmp_io, n_partitions=PARTS)
+    run.write_baseline(clean)
+    rms = {r["column"]: r for r in run.run(louder).drift.collect()}["rms"]
+    assert not rms["psi_passed"] and rms["psi"] > 0 and rms["ks_d"] > 0
+    tied = ValidationRun(
+        spark, tmp_io, n_partitions=PARTS, manifest_table="manifest2",
+        psi_threshold=rms["psi"], ks_threshold=rms["ks_d"],
+    )
+    again = {r["column"]: r for r in tied.run(louder).drift.collect()}["rms"]
+    assert (again["psi"], again["ks_d"]) == (rms["psi"], rms["ks_d"])
+    assert again["psi_passed"] and again["ks_passed"]
+
+
 def test_codec_mix_shift_trips_only_codec_drift(spark, tmp_io):
     """Forcing every clip to one codec (payload re-encoded accordingly, so
     every numeric distribution is untouched) must FAIL only the categorical
@@ -170,47 +190,6 @@ def test_manifest_snapshot_lineage(spark, tmp_io):
     # outputs are tagged with the same snapshot id (lineage)
     prof = tmp_io.read(spark, "profile")
     assert prof.filter(F.col("snapshot_id") == res.snapshot_id).count() == prof.count()
-
-
-@pytest.mark.parametrize("mode", ["bytes", "none"])
-def test_salt_modes_agree(spark, tmp_io, corrupted, mode):
-    """Salt placement is a physical-plan choice; verdicts and violation rows
-    must be identical to the default map-side-decode ('stats') mode."""
-    import shutil
-    import tempfile
-
-    from data_profiler_spark.sources.tableio import ParquetTableIO
-
-    clips, tr = corrupted
-    base = ValidationRun(spark, tmp_io, n_partitions=PARTS, salt_mode="stats").run(
-        clips, transcripts=tr
-    )
-    root = tempfile.mkdtemp(prefix="dps_salt_")
-    try:
-        other = ValidationRun(
-            spark, ParquetTableIO(root), n_partitions=PARTS, salt_mode=mode
-        ).run(clips, transcripts=tr)
-        key = ["check_name", "partition_id"]
-        a = sorted(
-            (r["check_name"], r["partition_id"], r["passed"], r["violation_count"])
-            for r in base.verdicts.select(*key, "passed", "violation_count").collect()
-        )
-        b = sorted(
-            (r["check_name"], r["partition_id"], r["passed"], r["violation_count"])
-            for r in other.verdicts.select(*key, "passed", "violation_count").collect()
-        )
-        assert a == b
-        va = sorted(
-            (r["check_name"], r["clip_id"])
-            for r in base.violations.select("check_name", "clip_id").collect()
-        )
-        vb = sorted(
-            (r["check_name"], r["clip_id"])
-            for r in other.violations.select("check_name", "clip_id").collect()
-        )
-        assert va == vb
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_mismatched_baseline_tables_refuse_to_score(spark, tmp_io):
@@ -325,3 +304,19 @@ def test_snapshot_baseline_shares_one_decode(spark, tmp_io, monkeypatch):
     rows2 = {r["column"]: r for r in res2.drift.collect()}
     assert not rows2["rms"]["psi_passed"]
     assert rows2["dur_ms"]["psi_passed"]
+
+
+def test_baseline_without_meta_skips_drift(spark, tmp_io):
+    """A baseline_hist with no baseline_meta has no edges to bin the
+    current histograms with: drift is skipped, never scored on guessed
+    fixed edges."""
+    import os
+    import shutil
+
+    clips = fixtures.generate_clips(spark, 80, seed=SEED)
+    run = ValidationRun(spark, tmp_io, n_partitions=4)
+    run.write_baseline(clips)
+    shutil.rmtree(os.path.join(tmp_io.root, "baseline_meta"))
+    res = run.run(clips)
+    assert res.drift is None and res.all_passed
+    assert not tmp_io.exists(spark, "drift")

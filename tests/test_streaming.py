@@ -295,6 +295,43 @@ def test_windowed_drift_scores_closed_windows(spark, dirs):
     assert str(t0 + 10 * m) in starts
 
 
+def test_windowed_drift_threshold_tie_passes_and_empty_baseline_fails(spark, dirs):
+    """The stream applies the batch runner's rule: a window whose score
+    equals its threshold passes; a window scored against an empty baseline
+    gets NULL scores and fails (no DIVIDE_BY_ZERO)."""
+    import datetime as dt
+
+    from data_profiler_spark.profiling import histogram
+    from data_profiler_spark.streaming.windowed_drift import windowed_drift_stream
+
+    in_dir, cp = dirs
+    schema = "event_id long, ts timestamp, value double"
+    base_df = spark.range(200).select((F.col("id") % 10).cast("double").alias("value"))
+    baseline = histogram(base_df, "value", lo=0.0, hi=10.0, nbins=10)
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    rows = [(i, t0 + dt.timedelta(seconds=i), float(i % 7)) for i in range(50)]
+    rows += [(1000, t0 + dt.timedelta(minutes=10), 5.0)]  # closes 12:00
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(in_dir)
+
+    def run(checkpoint, base, **thresholds):
+        out = windowed_drift_stream(
+            spark, in_dir, schema, "ts", "value", base, checkpoint,
+            lo=0.0, hi=10.0, nbins=10, **thresholds,
+        ).collect()
+        assert len(out) == 1 and out[0]["window_start"] == t0
+        return out[0]
+
+    first = run(f"{cp}/a", baseline, psi_threshold=0.0, ks_threshold=0.0)
+    assert first["psi"] > 0 and first["ks_d"] > 0
+    assert not first["psi_passed"] and not first["ks_passed"]
+    tied = run(f"{cp}/b", baseline, psi_threshold=first["psi"], ks_threshold=first["ks_d"])
+    assert (tied["psi"], tied["ks_d"]) == (first["psi"], first["ks_d"])
+    assert tied["psi_passed"] and tied["ks_passed"]
+    empty = run(f"{cp}/c", baseline.filter(F.lit(False)))
+    assert empty["psi"] is None and empty["ks_d"] is None
+    assert not empty["psi_passed"] and not empty["ks_passed"]
+
+
 def test_stream_dedup_drops_rearrivals_across_batches(spark, dirs):
     """dedup_doc_stream: a re-arrival of already-seen content in a LATER
     micro-batch run is dropped (state survives via the checkpoint); novel
